@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload serve_reads --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload serve_reads --seed 1 --seconds 12 --trace 0
 
 Run from the repository root. One process, one closed-loop client
 thread, Spark on ``local[N]`` with N = min(nproc, 4). The last stdout
@@ -127,7 +127,7 @@ class Session:
     """The SparkSession plus the JVM process it launched; ``close``
     stops both and waits for the JVM to exit."""
 
-    def __init__(self, work: str, cpus: int):
+    def __init__(self, work: str):
         from pyspark import SparkContext
 
         from multi_source_data_lake_with_etl_pipeline_spark.session import get_spark
@@ -147,7 +147,6 @@ class Session:
         })
         self.spark.sparkContext.setLogLevel("ERROR")
         self.proc = SparkContext._gateway.proc
-        self.cpus = cpus
 
     def peak_rss_mb(self) -> float:
         return _hwm_mb(os.getpid()) + _hwm_mb(self.proc.pid)
@@ -385,7 +384,7 @@ def main(argv=None) -> int:
     probe_s = host_probe_s()
     try:
         t = time.perf_counter()
-        session = Session(work, cpus)
+        session = Session(work)
         session_s = time.perf_counter() - t
         spark = session.spark
         w = WORKLOADS[args.workload](spark, args.seed, scale)
