@@ -195,8 +195,8 @@ def lake_base(lineitem: pa.Table, n: int) -> pa.Table:
 # prefix of it is at least 60% merges.
 COMMIT_CYCLE = ("merge", "merge", "etl_append", "merge", "merge", "delete",
                 "merge", "merge", "update", "merge", "merge", "sql_update")
-OPTIMIZE_EVERY = 12  # commits between optimize_if_needed calls
-CDF_EVERY = 6  # commits between change-feed drains
+OPTIMIZE_EVERY = 6  # commits between optimize_if_needed calls
+CDF_EVERY = 3  # commits between change-feed drains (a short run still drains)
 
 
 def _hot_keys(rng, next_key: int, live: np.ndarray, k: int) -> np.ndarray:

@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload serve_reads --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload serve_reads --seed 1 --seconds 14 --trace 0
 
 Run from the repository root. One process, one closed-loop client
 thread, Spark on ``local[N]`` with N = min(nproc, 4). The last stdout
