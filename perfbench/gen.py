@@ -49,7 +49,7 @@ class Scale:
     events: int
     documents: int
     lake_rows: int  # rows of the lake_commits base table
-    lake_files: int
+    lake_files: int  # files of the base table, written in LAKE_CHUNKS commits
     batch_rows: int  # mean rows per CDC batch
     read_lake_chunks: int  # versions of the serve_reads lake table
 
@@ -60,7 +60,7 @@ BENCH = Scale(
 )
 TOY = Scale(
     lineitem=4_000, events=2_000, documents=300,
-    lake_rows=2_000, lake_files=4, batch_rows=20, read_lake_chunks=4,
+    lake_rows=2_000, lake_files=6, batch_rows=20, read_lake_chunks=4,
 )
 
 
@@ -180,10 +180,10 @@ LAKE_COLS = ("l_id", "l_orderkey", "l_quantity", "l_extendedprice",
              "l_discount", "l_returnflag", "l_shipdate")
 
 
-def lake_base(lineitem: pa.Table, n: int) -> pa.Table:
-    """Keyed base table of ``lake_commits``: the first ``n`` lineitem
-    rows with a surrogate key ``l_id``."""
-    t = lineitem.slice(0, n)
+def lake_base(rng, n: int, n_orders: int) -> pa.Table:
+    """Keyed base table of ``lake_commits``: ``n`` lineitem rows with a
+    surrogate key ``l_id``."""
+    t = lineitem_table(rng, n, n_orders)
     return pa.table({
         "l_id": pa.array(np.arange(n, dtype="int64")),
         **{c: t[c] for c in LAKE_COLS[1:]},
@@ -191,12 +191,17 @@ def lake_base(lineitem: pa.Table, n: int) -> pa.Table:
 
 
 # Op kinds repeat in this fixed cycle (the seed draws only their
-# contents), so every run of every seed executes the same mix and any
-# prefix of it is at least 60% merges.
-COMMIT_CYCLE = ("merge", "merge", "etl_append", "merge", "merge", "delete",
-                "merge", "merge", "update", "merge", "merge", "sql_update")
-OPTIMIZE_EVERY = 6  # commits between optimize_if_needed calls
-CDF_EVERY = 3  # commits between change-feed drains (a short run still drains)
+# contents), so every run of every seed executes the same mix. Every
+# kind appears within the first five commits, which a run always
+# completes; over the whole cycle 60% of the commits are merges.
+COMMIT_CYCLE = ("merge", "delete", "update", "sql_update", "etl_append",
+                "merge", "merge", "merge", "merge", "merge")
+OPTIMIZE_EVERY = 5  # commits between optimize_if_needed calls
+CDF_EVERY = 4  # commits between change-feed drains
+# The base table is written as a create plus LAKE_CHUNKS - 1 appends, so
+# the loop starts at version LAKE_CHUNKS - 1 and writes the version-10
+# checkpoint within its first five commits.
+LAKE_CHUNKS = 6
 
 
 def _hot_keys(rng, next_key: int, live: np.ndarray, k: int) -> np.ndarray:
@@ -362,18 +367,17 @@ def generate(seed: int, out_dir: str, scale: Scale, tables=TABLES,
         "documents": lambda: documents_table(rng(4), scale.documents),
     }
     counts = {}
-    built = {}
     for name in tables:
-        t = built[name] = make[name]()
+        t = make[name]()
         pq.write_table(t, os.path.join(data_dir, f"{name}.parquet"), row_group_size=50_000)
         counts[name] = t.num_rows
     requests = read_requests(rng(5), n_requests, scale.lineitem, n_orders,
                              scale.events, scale.read_lake_chunks)
     commits: list[dict] = []
     if n_commits:
-        base = lake_base(built["lineitem"], scale.lake_rows)
+        base = lake_base(rng(6), scale.lake_rows, n_orders)
         pq.write_table(base, os.path.join(data_dir, "lake_base.parquet"))
-        commits = commit_sequence(rng(6), scale.lake_rows, scale.batch_rows, n_commits, batch_dir)
+        commits = commit_sequence(rng(7), scale.lake_rows, scale.batch_rows, n_commits, batch_dir)
     return Inputs(data_dir, batch_dir, requests, commits, counts)
 
 

@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload serve_reads --seed 1 --seconds 14 --trace 0
+    python3 perfbench/run.py --workload serve_reads --seed 1 --seconds 8 --trace 0
 
 Run from the repository root. One process, one closed-loop client
 thread, Spark on ``local[N]`` with N = min(nproc, 4). The last stdout
@@ -24,7 +24,7 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ENGINE = "multi_source_data_lake_with_etl_pipeline_spark"
-SETUP_REPS = 3
+SETUP_REPS = 2
 DRIVER_MEM = "2g"
 
 _READS = "read_p50_ms, read_p95_ms on serve_reads"
@@ -65,6 +65,10 @@ LAYER_METRICS = [
 ] + [(f"queries.{q}_s", f"op.query.{q}", "s", _BATCH) for q in (
     "dup_overlap_by_source", "lake_bucket_point_lookup", "near_dup_clusters",
     "sensor_feed_rollup")]
+# layers only the batch pass reaches; their metrics join the result line
+# of every traced run
+BATCH_CONTRACT = ("llm_ops.curation_s", "llm_ops.minhash_lsh_pairs_s",
+                  "sinks.write_training_shards_s") + tuple(m for m, *_ in LAYER_METRICS[-4:])
 # workload-report metrics that belong to a layer
 LAYER_REPORTED = {
     "lake.files_rewritten_per_commit": "write_amp on lake_commits",
@@ -99,7 +103,6 @@ def parse(argv):
     p.add_argument("--seconds", type=float, required=True)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     p.add_argument("--scale", choices=("bench", "toy"), default="bench")
-    p.add_argument("--setup-reps", type=int, default=SETUP_REPS)
     return p.parse_args(argv)
 
 
@@ -169,18 +172,18 @@ class Session:
                 self.proc.wait(timeout=30)
 
 
-def loop(ops, seconds: float, tracer=None, whole_pass: bool = False):
+def loop(ops, seconds: float, must_run=(), tracer=None):
     """Closed loop: the next op starts when the previous returns. Stops
-    at the deadline; with ``whole_pass`` (etl_batch) not before the
-    first pass is complete. Returns (samples, wall seconds)."""
+    at the deadline, but not before every kind in ``must_run`` has run
+    once. Returns (samples, wall seconds)."""
     samples: list[dict] = []
+    todo = set(must_run)
     t0 = time.perf_counter()
     deadline = t0 + seconds
     for kind, fn, req in ops:
-        if samples and whole_pass and (req or {}).get("first"):
-            whole_pass = False
-        if time.perf_counter() >= deadline and not whole_pass:
+        if time.perf_counter() >= deadline and not todo:
             break
+        todo.discard(kind)
         sid = tracer.begin(f"op.{kind}", op=len(samples)) if tracer else None
         start = time.time()
         t = time.perf_counter()
@@ -222,14 +225,18 @@ def per_kind(samples: list[dict]) -> dict:
 
 
 def e2e(w, samples: list[dict], wall: float) -> dict:
-    """Median and p90 latency of the workload's primary ops, and primary
-    ops per second of the loop's wall time."""
+    """Median and p90 latency of the workload's primary ops; the mean
+    over the primary kinds of each kind's median, which weighs every
+    kind alike, so how many ops of each kind a run completes does not
+    move it; and primary ops per second of the loop's wall time."""
     from workloads import pct
 
     lat = [s["ms"] for s in samples if s["kind"] in w.primary]
+    kinds = [[s["ms"] for s in samples if s["kind"] == k] for k in w.primary]
     return {
         "p50_ms": pct(lat, 50),
         "p90_ms": pct(lat, 90),
+        "kind_p50_ms": statistics.mean(pct(v, 50) for v in kinds if v),
         "ops_per_s": len(lat) / wall,
     }
 
@@ -274,7 +281,7 @@ def layer_metrics(tracer, samples: list[dict], spark, named: dict) -> tuple[dict
     for metric, (v, unit) in contract.items():
         if metric.startswith("spark."):
             out[metric] = {"value": v, "unit": unit,
-                           "maps_to": SPARK_MAPS.get(metric, "p50_ms of the op kinds that run it")}
+                           "maps_to": SPARK_MAPS.get(metric, "op.<kind>.p50_ms of the op kinds that run it")}
     spans_out = {
         name: {"calls": calls.get(name, 0),
                "mean_ms": tots.get(name, 0.0) * 1000 / max(calls.get(name, 0), 1),
@@ -293,6 +300,27 @@ def layer_metrics(tracer, samples: list[dict], spark, named: dict) -> tuple[dict
         "spark_per_op_kind": by_kind,
     }
     return contract, report
+
+
+def batch_pass(spark, seed: int, work: str):
+    """A traced run's last step: one pass over the etl_batch job list
+    at toy scale, after the timed loop, so that the layers only batch
+    jobs reach (ETL file sinks, curation, shards, the registered
+    queries) are timed on every workload. Returns (samples, tracer)."""
+    import gen
+    from spans import Tracer
+    from workloads import EtlBatch
+
+    b = EtlBatch(spark, seed, gen.TOY)
+    b.setup(os.path.join(work, "batch"))
+    tracer = Tracer()
+    tracer.install(b.trace_points())
+    try:
+        samples, _wall = loop(b.ops(), 0, b.must_run, tracer)
+    finally:
+        tracer.uninstall()
+    b.verify(samples)
+    return samples, tracer
 
 
 def tracing_overhead(out_dir: str, args, traced: dict) -> dict:
@@ -330,7 +358,7 @@ def run_all(args, names: list[str]) -> int:
         out = subprocess.run(
             [sys.executable, os.path.abspath(__file__), "--workload", name,
              "--seed", str(args.seed), "--seconds", str(args.seconds), "--trace", str(args.trace),
-             "--scale", args.scale, "--setup-reps", str(args.setup_reps)],
+             "--scale", args.scale],
             capture_output=True, text=True)
         lines = out.stdout.strip().splitlines()
         if out.returncode or not lines:
@@ -347,6 +375,7 @@ def run_all(args, names: list[str]) -> int:
 
 
 def main(argv=None) -> int:
+    t_main = time.perf_counter()
     args = parse(argv)
     root = os.getcwd()
     if not os.path.isdir(os.path.join(root, ENGINE)):
@@ -388,17 +417,18 @@ def main(argv=None) -> int:
         session_s = time.perf_counter() - t
         spark = session.spark
         w = WORKLOADS[args.workload](spark, args.seed, scale)
-        t = time.perf_counter()
-        w.warm(os.path.join(work, "warm"))
-        warm_s = time.perf_counter() - t
         reps = []
-        for i in range(args.setup_reps):
+        for i in range(SETUP_REPS):
             rep_dir = os.path.join(work, f"rep{i}")
             if i:
                 shutil.rmtree(os.path.join(work, f"rep{i - 1}"), ignore_errors=True)
             t = time.perf_counter()
             w.setup(rep_dir)
             reps.append(time.perf_counter() - t)
+            if i == 0:  # warm up on the first build; the last one is timed
+                t = time.perf_counter()
+                warm_ops = w.warm()
+                warm_s = time.perf_counter() - t
         setup_s = session_s + warm_s + statistics.median(reps)
         tracer = None
         if args.trace:
@@ -407,35 +437,48 @@ def main(argv=None) -> int:
             tracer = Tracer()
             tracer.install(w.trace_points())
         try:
-            samples, wall = loop(w.ops(), args.seconds, tracer,
-                                    whole_pass=args.workload == "etl_batch")
+            samples, wall = loop(w.ops(), args.seconds, w.must_run, tracer)
         finally:
             if tracer:
                 tracer.uninstall()
+        t = time.perf_counter()
         extra_failures = w.verify(samples) or []
         attempted, failed = tally(samples, extra_failures)
+        verify_s = time.perf_counter() - t
+        if tracer:
+            b_samples, b_tracer = batch_pass(spark, args.seed, work)
+            b_attempted, b_failed = tally(b_samples, [])
+            attempted, failed = attempted + b_attempted, failed + b_failed
         for msg in extra_failures:
             print(f"check failed: {msg}", file=sys.stderr)
         run_e2e = e2e(w, samples, wall)
-        metrics = {"setup_s": (setup_s, "s"), "p50_ms": (run_e2e["p50_ms"], "ms"),
+        metrics = {"setup_s": (setup_s, "s"), "kind_p50_ms": (run_e2e["kind_p50_ms"], "ms"),
                    "ops_per_s": (run_e2e["ops_per_s"], "1/s")}
-        named = {**w.report(samples, wall), "p90_ms": (run_e2e["p90_ms"], "ms"),
+        named = {**w.report(samples, wall), "p50_ms": (run_e2e["p50_ms"], "ms"),
+                 "p90_ms": (run_e2e["p90_ms"], "ms"),
                  **per_kind(samples), "setup_s": (setup_s, "s"),
                  "session_start_s": (session_s, "s"), "warm_up_s": (warm_s, "s"),
                  "build_median_s": (statistics.median(reps), "s"),
+                 "loop_s": (wall, "s"), "verify_s": (verify_s, "s"),
+                 "run_wall_s": (time.perf_counter() - t_main, "s"),
                  "error_rate": (failed / attempted, "ratio"),
                  "peak_rss_mb": (session.peak_rss_mb(), "MB"), "host_probe_s": (probe_s, "s")}
         report = {
             "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
             "trace": args.trace, "scale": args.scale, "nproc": os.cpu_count(),
             "local_n": cpus, "driver_memory": DRIVER_MEM,
-            "pyspark": __import__("pyspark").__version__, "setup_reps_s": reps,
+            "pyspark": __import__("pyspark").__version__, "setup_reps_s": reps, "warm_ops_s": warm_ops,
             "attempted": attempted, "failed": failed, "check_failures": extra_failures,
             "e2e": _as_json(metrics), "metrics": _as_json(named),
         }
         out_metrics = metrics
         if tracer:
             out_metrics, report["layers"] = layer_metrics(tracer, samples, spark, named)
+            b_spark, report["batch_pass"] = layer_metrics(b_tracer, b_samples, spark, {})
+            report["batch_pass"]["spark"] = _as_json(b_spark)
+            for k in BATCH_CONTRACT:
+                m = report["batch_pass"]["named"][k]
+                out_metrics[k] = (m["value"], m["unit"])
             report["per_layer"] = _as_json(out_metrics)
             report["tracing_overhead"] = tracing_overhead(out_dir, args, metrics)
             tracer.dump(os.path.join(out_dir, f"spans-{args.workload}-{args.seed}.json"))
@@ -450,6 +493,8 @@ def main(argv=None) -> int:
                 print(f"layer {name}: self={m['self_ms_per_op']:.3f} ms/op  -> {m['maps_to']}")
             for name, m in report["layers"]["named"].items():
                 print(f"{args.workload} {name} = {m['value']:.6g} {m['unit']}  -> {m['maps_to']}")
+            for name, m in report["batch_pass"]["named"].items():
+                print(f"batch_pass {name} = {m['value']:.6g} {m['unit']}  -> {m['maps_to']}")
             for name, sp in report["layers"]["spans"].items():
                 print(f"span {name}: calls={sp['calls']} mean={sp['mean_ms']:.3f} ms "
                       f"self={sp['self_ms_per_op']:.3f} ms/op")

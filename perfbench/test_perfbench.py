@@ -47,6 +47,19 @@ def test_table_subset_matches_full_set(tmp_path):
         assert f1.read() == f2.read()
 
 
+def test_every_commit_kind_falls_in_the_guaranteed_prefix():
+    from workloads import COMMIT_KINDS, LakeCommits
+
+    cycle = gen.COMMIT_CYCLE
+    assert set(cycle) == set(COMMIT_KINDS)
+    assert sum(k == "merge" for k in cycle) > len(cycle) / 2
+    # a run always completes the first op of every kind in must_run,
+    # which stays a short prefix of the cycle
+    last = max(cycle.index(k) for k in COMMIT_KINDS)
+    assert last < 5 and last + 1 >= gen.CDF_EVERY and last + 1 >= gen.OPTIMIZE_EVERY
+    assert set(LakeCommits.must_run) == set(COMMIT_KINDS) | {"cdf_drain", "optimize"}
+
+
 def test_checksum_is_order_free_and_value_sensitive():
     rows = [(1, "a", 2.5), (2, "b", None)]
     assert oracle.checksum(rows) == oracle.checksum(rows[::-1])
@@ -133,7 +146,7 @@ def test_self_time_subtracts_children():
 def _run(workload: str, trace: int, tmp_path) -> tuple[dict, dict]:
     out = subprocess.run(
         [sys.executable, os.path.join(HERE, "run.py"), "--workload", workload, "--seed", "3",
-         "--seconds", "2", "--trace", str(trace), "--scale", "toy", "--setup-reps", "1"],
+         "--seconds", "2", "--trace", str(trace), "--scale", "toy"],
         cwd=ROOT, capture_output=True, text=True, timeout=600)
     assert out.returncode == 0, out.stderr[-3000:]
     last = json.loads(out.stdout.strip().splitlines()[-1])
@@ -164,3 +177,11 @@ def test_every_metric_is_emitted_with_its_unit(workload, tmp_path):
             assert k in named and named[k]["unit"], k
         if trace:
             assert report["layers"]["spans"] and report["tracing_overhead"]
+            assert report["batch_pass"]["named"]
+        if workload == "lake_commits":
+            from workloads import LakeCommits
+
+            for kind in LakeCommits.must_run:
+                assert named[f"op.{kind}.samples"]["value"] >= 1, kind
+            # the loop starts below version 10 and writes its checkpoint
+            assert named["lake.checkpoints_written"]["value"] >= 1

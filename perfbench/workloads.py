@@ -1,8 +1,8 @@
-"""The workloads. Each has a ``warm`` (the costliest op paths once, at
-toy scale) and a ``setup`` (input generation and table build), both
-untimed; an ``ops`` iterator for the closed-loop client; a ``verify``
-that checks every executed op against DuckDB; and the layer entry
-points its traced run wraps.
+"""The workloads. Each has a ``setup`` (input generation and table
+build) and a ``warm`` (the first ops of each kind, run on a throwaway
+build), both untimed; an ``ops`` iterator for the closed-loop client; a
+``verify`` that checks every executed op against DuckDB; and the layer
+entry points its traced run wraps.
 
 An op is ``(kind, fn, request)``; the loop times ``fn()``. ``verify``
 marks each sample ``correct``; a failure is an exception, a
@@ -14,6 +14,7 @@ from __future__ import annotations
 import itertools
 import os
 import statistics
+import time
 
 import pyarrow.parquet as pq
 
@@ -37,8 +38,11 @@ def _engine():
 class Workload:
     name = ""
     tables: tuple[str, ...] = ()
-    #: op kinds whose latency the end-to-end p50/p90 describe
+    #: op kinds whose latency and rate the end-to-end metrics describe
     primary: tuple[str, ...] = ()
+    #: op kinds a run completes at least once, however long that takes,
+    #: and that the warm-up runs once each
+    must_run: tuple[str, ...] = ()
 
     def __init__(self, spark, seed: int, scale: gen.Scale):
         self.spark = spark
@@ -46,26 +50,22 @@ class Workload:
         self.scale = scale
         self.m = _engine()
 
-    #: {op kind: runs} done at toy scale before timing, to load and
-    #: compile their code paths
-    warm_runs: dict[str, int] = {}
-
-    def warm(self, warm_dir: str) -> None:
-        """Set up at toy scale and run the first ops of each warm kind."""
-        if not self.warm_runs:
-            return
-        real, self.scale = self.scale, gen.TOY
-        todo = dict(self.warm_runs)
-        try:
-            self.setup(warm_dir)
-            for kind, fn, _req in self.ops():
-                if todo.get(kind):
-                    todo[kind] -= 1
-                    fn()
-                    if not any(todo.values()):
-                        break
-        finally:
-            self.scale = real
+    def warm(self) -> list[tuple[str, float]]:
+        """Run the first op of each ``must_run`` kind on the current
+        build, which the runner then throws away, so that first-time
+        class loading and compilation stay out of the timed loop.
+        Returns (kind, seconds) per warm op."""
+        todo = set(self.must_run)
+        took: list[tuple[str, float]] = []
+        for kind, fn, _req in self.ops():
+            if kind in todo:
+                todo.discard(kind)
+                t = time.perf_counter()
+                fn()
+                took.append((kind, round(time.perf_counter() - t, 3)))
+                if not todo:
+                    break
+        return took
 
     def oracle(self) -> Oracle:
         return Oracle(self.inputs.data_dir, list(self.tables))
@@ -106,8 +106,8 @@ class ServeReads(Workload):
     tables = ("lineitem", "orders", "events")
     primary = ("query_table", "query_collection", "query_measurement",
                "lake_latest", "lake_version")
+    must_run = tuple(sorted(set(gen.READ_CYCLE)))
     n_requests = 2000
-    warm_runs = dict.fromkeys(gen.READ_CYCLE, 1)
 
     def setup(self, rep_dir: str) -> None:
         m = self.m
@@ -217,13 +217,9 @@ class LakeCommits(Workload):
     """One writer applying seeded CDC batches to a lake table."""
 
     name = "lake_commits"
-    tables = ("lineitem",)
     primary = COMMIT_KINDS
-    n_commits = 120
-    # the first merge and the first drain carry most of the JVM's
-    # compile cost (merges keep speeding up for a dozen more runs, which
-    # a run cannot afford to wait out)
-    warm_runs = {"merge": 1, "cdf_drain": 1}
+    must_run = COMMIT_KINDS + ("cdf_drain", "optimize")
+    n_commits = 40
 
     def setup(self, rep_dir: str) -> None:
         m = self.m
@@ -233,10 +229,19 @@ class LakeCommits(Workload):
         LakeTable = m["lake"].LakeTable
         base = m["catalog"].load_table(self.spark, d, "lake_base")
         self.path = os.path.join(rep_dir, "commits_lake")
-        self.table = LakeTable.create(self.spark, self.path, base.repartition(self.scale.lake_files))
+        chunk = -(-self.scale.lake_rows // gen.LAKE_CHUNKS)
+        files = max(self.scale.lake_files // gen.LAKE_CHUNKS, 1)
+        for c in range(gen.LAKE_CHUNKS):
+            part = base.filter(f"l_id >= {c * chunk} AND l_id < {(c + 1) * chunk}").repartition(files)
+            if c == 0:
+                self.table = LakeTable.create(self.spark, self.path, part)
+            else:
+                self.table.append(part)
+        self.base_version = self.table.latest_version()
         self.ck = os.path.join(rep_dir, "cdf_checkpoint")
         self.drains: list = []
         self.base_files = set(self._data_files())
+        self.base_checkpoints = set(self._checkpoints())
         self.svc = m["api.service"].DataLakeService(self.spark, d, loaders=lake_loaders(self.m))
 
     def _where(self, op):
@@ -264,10 +269,12 @@ class LakeCommits(Workload):
             {"lt": t})
 
     def _drain(self):
-        """One availableNow drain of the change feed, resuming from the
-        checkpoint, into the driver as pandas frames."""
+        """One availableNow drain of the change feed past the base
+        table, resuming from the checkpoint, into the driver as pandas
+        frames."""
         got = []
-        q = (self.m["streaming.cdf_source"].lake_cdf_stream(self.spark, self.path, from_version=0)
+        q = (self.m["streaming.cdf_source"].lake_cdf_stream(self.spark, self.path,
+                                                            from_version=self.base_version)
              .writeStream.foreachBatch(lambda df, _bid: got.append(df.toPandas()))
              .option("checkpointLocation", self.ck).trigger(availableNow=True).start())
         try:
@@ -278,7 +285,7 @@ class LakeCommits(Workload):
         return {"rows": sum(len(g) for g in got)}
 
     def _optimize(self):
-        return self.table.optimize_if_needed(small_file_bytes=24 * 1024, min_small_files=8)
+        return self.table.optimize_if_needed(small_file_bytes=24 * 1024, min_small_files=2)
 
     def ops(self):
         n = 0
@@ -392,7 +399,7 @@ class LakeCommits(Workload):
         """Bytes and rows of the data files the loop added (nothing is
         vacuumed, so every file not in the base snapshot is new)."""
         hist = self.table.history()
-        loop = [h for h in hist if h["version"] > 0]
+        loop = [h for h in hist if h["version"] > self.base_version]
         added_bytes = added_rows = 0
         for p in self._data_files():
             if p not in self.base_files:
@@ -404,9 +411,14 @@ class LakeCommits(Workload):
             "added_bytes": added_bytes, "added_rows": added_rows, "rows_changed": changed,
             "files_rewritten": sum(h["removed_files"] for h in loop), "commits": len(loop),
             "versions": hist[0]["version"] + 1,
+            "checkpoints": len(set(self._checkpoints()) - self.base_checkpoints),
             "log_bytes": sum(os.path.getsize(os.path.join(r, f))
                              for r, _d, fs in os.walk(os.path.join(self.path, "_log")) for f in fs),
         }
+
+    def _checkpoints(self) -> list[str]:
+        return [f for f in os.listdir(os.path.join(self.path, "_log"))
+                if f.startswith("_checkpoint.") and f.endswith(".json")]
 
     def _data_files(self) -> list[str]:
         return [os.path.join(r, f) for r, _d, fs in os.walk(os.path.join(self.path, "data"))
@@ -433,6 +445,7 @@ class LakeCommits(Workload):
             "lake.rows_changed_per_row_rewritten": (w["rows_changed"] / max(w["added_rows"], 1), "ratio"),
             "lake.log_bytes": (w["log_bytes"], "bytes"),
             "lake.versions": (w["versions"], "count"),
+            "lake.checkpoints_written": (w["checkpoints"], "count"),
         }
 
 
@@ -450,6 +463,7 @@ class EtlBatch(Workload):
     ETL_TABLES = ("lineitem", "orders", "events")
     primary = (tuple(f"run_etl.{t}" for t in ETL_TABLES) + ("curation",)
                + tuple(f"query.{q}" for q in QUERIES))
+    must_run = primary
 
     def setup(self, rep_dir: str) -> None:
         self.inputs = gen.generate(self.seed, rep_dir, self.scale, self.tables)
@@ -489,6 +503,9 @@ class EtlBatch(Workload):
                                 "filter_valid", "enrichment"] + tail,
         }
 
+    def warm(self) -> list[tuple[str, float]]:
+        return []
+
     def _curation(self, tag: str) -> dict:
         m = self.m
         docs = m["catalog"].load_table(self.spark, self.inputs.data_dir, "documents")
@@ -522,9 +539,8 @@ class EtlBatch(Workload):
         while True:
             self.n_pass += 1
             tag = f"p{self.n_pass}"
-            for i, job in enumerate(self._jobs(tag)):
-                kind, fn, req = job
-                yield kind, fn, {**req, "pass": self.n_pass, "first": i == 0}
+            for kind, fn, req in self._jobs(tag):
+                yield kind, fn, {**req, "pass": self.n_pass}
 
     def trace_points(self):
         m = self.m
