@@ -192,8 +192,8 @@ def lake_base(rng, n: int, n_orders: int) -> pa.Table:
 
 # Op kinds repeat in this fixed cycle (the seed draws only their
 # contents), so every run of every seed executes the same mix. Every
-# kind appears within the first five commits, which a run always
-# completes; over the whole cycle 60% of the commits are merges.
+# kind appears within the first five commits, and a run always completes
+# the first six; over the whole cycle 60% of the commits are merges.
 COMMIT_CYCLE = ("merge", "delete", "update", "sql_update", "etl_append",
                 "merge", "merge", "merge", "merge", "merge")
 OPTIMIZE_EVERY = 5  # commits between optimize_if_needed calls

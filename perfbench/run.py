@@ -21,6 +21,7 @@ import shutil
 import statistics
 import sys
 import time
+from collections import Counter
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ENGINE = "multi_source_data_lake_with_etl_pipeline_spark"
@@ -174,16 +175,16 @@ class Session:
 
 def loop(ops, seconds: float, must_run=(), tracer=None):
     """Closed loop: the next op starts when the previous returns. Stops
-    at the deadline, but not before every kind in ``must_run`` has run
-    once. Returns (samples, wall seconds)."""
+    at the deadline, but not before each kind in ``must_run`` has run as
+    often as it is listed there. Returns (samples, wall seconds)."""
     samples: list[dict] = []
-    todo = set(must_run)
+    todo = Counter(must_run)
     t0 = time.perf_counter()
     deadline = t0 + seconds
     for kind, fn, req in ops:
-        if time.perf_counter() >= deadline and not todo:
+        if time.perf_counter() >= deadline and not +todo:
             break
-        todo.discard(kind)
+        todo[kind] -= 1
         sid = tracer.begin(f"op.{kind}", op=len(samples)) if tracer else None
         start = time.time()
         t = time.perf_counter()

@@ -58,6 +58,7 @@ def test_every_commit_kind_falls_in_the_guaranteed_prefix():
     last = max(cycle.index(k) for k in COMMIT_KINDS)
     assert last < 5 and last + 1 >= gen.CDF_EVERY and last + 1 >= gen.OPTIMIZE_EVERY
     assert set(LakeCommits.must_run) == set(COMMIT_KINDS) | {"cdf_drain", "optimize"}
+    assert cycle[:6].count("merge") == LakeCommits.must_run.count("merge") == 2
 
 
 def test_checksum_is_order_free_and_value_sensitive():

@@ -40,8 +40,8 @@ class Workload:
     tables: tuple[str, ...] = ()
     #: op kinds whose latency and rate the end-to-end metrics describe
     primary: tuple[str, ...] = ()
-    #: op kinds a run completes at least once, however long that takes,
-    #: and that the warm-up runs once each
+    #: op kinds a run completes as often as each is listed, however long
+    #: that takes; the warm-up runs each kind once
     must_run: tuple[str, ...] = ()
 
     def __init__(self, spark, seed: int, scale: gen.Scale):
@@ -218,7 +218,9 @@ class LakeCommits(Workload):
 
     name = "lake_commits"
     primary = COMMIT_KINDS
-    must_run = COMMIT_KINDS + ("cdf_drain", "optimize")
+    # two merges: the first merge on a fresh table is the slower one, and
+    # a run that sometimes gets a second would move the merge median
+    must_run = COMMIT_KINDS + ("merge", "cdf_drain", "optimize")
     n_commits = 40
 
     def setup(self, rep_dir: str) -> None:
