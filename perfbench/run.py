@@ -32,6 +32,8 @@ _READS = "read_p50_ms, read_p95_ms on serve_reads"
 _COMMITS = "commit_p50_ms, commit_p90_ms on lake_commits"
 _BATCH = "batch_wall_s on etl_batch"
 _ETL = "commit_p50_ms on lake_commits (etl_append), batch_wall_s on etl_batch"
+_QUERIES = ("dup_overlap_by_source", "lake_bucket_point_lookup", "near_dup_clusters",
+            "sensor_feed_rollup")
 # (named per-layer metric, span it is read from, unit, end-to-end metric it should move)
 LAYER_METRICS = [
     ("catalog.load_table_ms", "catalog.load_table", "ms", "read_p50_ms on serve_reads"),
@@ -63,13 +65,11 @@ LAYER_METRICS = [
     ("llm_ops.gopher_flags_ms", "llm_ops.gopher_flags", "ms", _BATCH),
     ("llm_ops.minhash_lsh_pairs_s", "llm_ops.minhash_lsh_pairs", "s", _BATCH),
     ("llm_ops.curation_s", "op.curation", "s", _BATCH),
-] + [(f"queries.{q}_s", f"op.query.{q}", "s", _BATCH) for q in (
-    "dup_overlap_by_source", "lake_bucket_point_lookup", "near_dup_clusters",
-    "sensor_feed_rollup")]
+] + [(f"queries.{q}_s", f"op.query.{q}", "s", _BATCH) for q in _QUERIES]
 # layers only the batch pass reaches; their metrics join the result line
 # of every traced run
 BATCH_CONTRACT = ("llm_ops.curation_s", "llm_ops.minhash_lsh_pairs_s",
-                  "sinks.write_training_shards_s") + tuple(m for m, *_ in LAYER_METRICS[-4:])
+                  "sinks.write_training_shards_s") + tuple(f"queries.{q}_s" for q in _QUERIES)
 # workload-report metrics that belong to a layer
 LAYER_REPORTED = {
     "lake.files_rewritten_per_commit": "write_amp on lake_commits",
