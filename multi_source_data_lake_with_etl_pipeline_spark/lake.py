@@ -527,6 +527,31 @@ def _ident_refs(predicate: str, name: str) -> bool:
     return re.search(rf"(?i)(?<![A-Za-z0-9_]){re.escape(name)}(?![A-Za-z0-9_])", predicate) is not None
 
 
+_SRC_FLAG = "_mdl_src_present"
+
+
+def merge_upsert_df(target: DataFrame, source: DataFrame, key: str) -> DataFrame:
+    """The MERGE plan: whenMatchedUpdateAll / whenNotMatchedInsertAll.
+
+    Returns the merged DataFrame (lazy). Column set = target's; source
+    must carry the same columns. Source rows with a NULL key are
+    inserts (they cannot equality-match), and presence is a literal
+    flag so NULL keys never corrupt the matched/unmatched decision."""
+    cols = target.columns
+    t = target.alias("t")
+    s = source.withColumn(_SRC_FLAG, F.lit(True)).alias("s")
+    joined = t.join(s, F.col(f"t.{key}") == F.col(f"s.{key}"), "full_outer")
+    # Source row present ⇒ take source values wholesale (including its
+    # nulls — coalesce per column would wrongly keep stale target values
+    # when an update nulls a field).
+    src_present = F.col(f"s.{_SRC_FLAG}").isNotNull()
+    picked = [
+        F.when(src_present, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
+        for c in cols
+    ]
+    return joined.select(*picked)
+
+
 class LakeTable:
     """Handle to a versioned lake table at ``path``."""
 
@@ -3818,25 +3843,23 @@ class LakeTable:
         op_col: str = "op",
         order_col: str | None = None,
         dv: bool = False,
-        atomic: bool = False,
     ) -> dict:
         """Apply a Debezium-style CDC batch: rows tagged I/U/D in
         ``op_col`` (insert/update collapse to upsert — the lake is
         state, not history), optionally ordered by ``order_col`` so
         only each key's LATEST change applies (at-least-once feeds
-        replay safely). Deletes tombstone by key. Two file-granular
-        commits at most (merge + delete), both O(changed files);
-        ``dv=True`` routes both through deletion vectors — a trickle
-        of small CDC batches against large files then costs
-        O(changed rows) per batch instead of O(touched bytes), with
-        compaction folding the vectors on the maintenance cadence.
+        replay safely). Deletes tombstone by key.
 
-        ``atomic=True`` applies the WHOLE batch as ONE ``merge_into``
-        commit (matched-delete on the flag, matched-update, insert) —
-        a reader can never observe the upserts without the deletes
-        (the default two-commit path has a visible intermediate
-        version between them; Delta MERGE-based CDC is single-commit,
-        and so is this mode). Same result, one version."""
+        The WHOLE batch lands as ONE ``merge_into`` commit
+        (matched-delete on the flag, matched-update, insert) — a
+        reader can never observe the upserts without the deletes, as
+        in Delta's MERGE-based CDC. The commit is O(changed files);
+        ``dv=True`` routes it through deletion vectors — a trickle of
+        small CDC batches against large files then costs O(changed
+        rows) per batch instead of O(touched bytes), with compaction
+        folding the vectors on the maintenance cadence. A batch that
+        changes nothing (e.g. only tombstones of absent keys) commits
+        nothing and returns the current version."""
         from pyspark.sql import Window as W
 
         b = batch
@@ -3849,15 +3872,12 @@ class LakeTable:
             )
         # a DEFAULTed column the feed omits materializes in the feed
         # itself (BEFORE the persist, so unpersist hits this frame), so
-        # the atomic merge_into and two-commit merge() paths apply the
-        # identical row image
+        # the update and insert clauses apply the identical row image
         b = self._apply_defaults(b, self._snapshot()[2])
         b = b.persist()
         # VALIDATE before any commit, so a malformed batch leaves the
         # table untouched. Without order_col a key appearing twice is
-        # ambiguous (which change wins?) — merge() would emit one output
-        # row per source duplicate and silently duplicate the key in the
-        # table, so refuse instead of guessing.
+        # ambiguous (which change wins?) — refuse instead of guessing.
         if order_col is None:
             dup = (
                 b.groupBy(key).count().filter(F.col("count") > 1).limit(1).count()
@@ -3868,11 +3888,18 @@ class LakeTable:
                     "apply_cdc: duplicate keys in batch with no order_col — "
                     "pass order_col so only each key's latest change applies"
                 )
-        # upserts must carry exactly the table's columns — op/order
-        # metadata stays in the feed, not the table
         _, _, schema = self._snapshot()
-        # generated columns may be absent from the feed — merge() will
-        # materialize them; every other table column must be present
+        bad = [f.name for f in schema.fields if _identity_spec(f) and f.name in b.columns]
+        if bad:  # merge_into would silently drop them
+            b.unpersist()
+            raise ValueError(
+                f"column(s) {bad} are GENERATED ALWAYS AS IDENTITY — "
+                "the engine assigns values; remove them from the source"
+            )
+        # upserts must carry exactly the table's columns — op/order
+        # metadata stays in the feed, not the table;
+        # generated columns may be absent from the feed — the merge
+        # materializes them; every other table column must be present
         cols = [
             f.name
             for f in schema.fields
@@ -3885,60 +3912,42 @@ class LakeTable:
         if dels.filter(F.col(key).isNull()).limit(1).count():
             b.unpersist()
             raise ValueError("apply_cdc: delete row with NULL key")
-        if atomic:
-            # Generated columns never appear in the merge clauses —
-            # merge_into rejects them in SET (they recompute via
-            # _apply_generated on both the update and insert legs).
-            # A batch that SUPPLIES one is validated against the
-            # expression first, exactly like the non-atomic merge()
-            # path: same contract, one version.
-            gen_supplied = [
-                f for f in schema.fields if _gen_expr(f) and f.name in b.columns
-            ]
-            if gen_supplied:
-                try:
-                    self._apply_generated(ups, StructType(gen_supplied))
-                except Exception:
-                    b.unpersist()
-                    raise
-            gen_names = {
-                f.name
-                for f in schema.fields
-                if _gen_expr(f) or _identity_spec(f)
-            }
-            mcols = [c for c in cols if c not in gen_names]
-            src = b.select(
-                *cols, F.upper(F.col(op_col)).alias("_cdc_op")
-            )
-            r = self.merge_into(src, [key], clauses=[
-                {"when": "matched", "action": "delete",
-                 "condition": "src._cdc_op = 'D'"},
-                {"when": "matched", "action": "update",
-                 "set": {c: f"src.{c}" for c in mcols if c != key},
-                 "condition": "src._cdc_op <> 'D'"},
-                {"when": "not_matched", "action": "insert",
-                 "values": {c: f"src.{c}" for c in mcols},
-                 "condition": "src._cdc_op <> 'D'"},
-            ], dv=dv)
-            b.unpersist()
-            return {
-                "upserted": r["updated"] + r["inserted"],
-                "deleted": r["deleted"],
-                "version": r["version"],
-            }
-        out: dict = {"upserted": 0, "deleted": 0}
-        if ups.limit(1).count():
-            m = self.merge(ups, key, dv=dv)
-            out["upserted"] = m["inserted"] + m["updated"]
-        # Tombstones apply via an anti-join on the keys frame (never SQL
-        # string splicing — a key containing quotes/backslashes must not
-        # be able to reshape the predicate), file-granular like delete().
-        if dels.limit(1).count():
-            d = self.delete_keys(dels, key, dv=dv)
-            out["deleted"] = d["deleted"]
+        # Generated columns never appear in the merge clauses —
+        # merge_into rejects them in SET (they recompute via
+        # _apply_generated on both the update and insert legs). A batch
+        # that SUPPLIES one is validated against the expression first,
+        # like an append: a divergent value rejects the whole batch.
+        gen_supplied = [
+            f for f in schema.fields if _gen_expr(f) and f.name in b.columns
+        ]
+        if gen_supplied:
+            try:
+                self._apply_generated(ups, StructType(gen_supplied))
+            except Exception:
+                b.unpersist()
+                raise
+        gen_names = {f.name for f in schema.fields if _gen_expr(f) or _identity_spec(f)}
+        mcols = [c for c in cols if c not in gen_names]
+        src = b.select(*cols, F.upper(F.col(op_col)).alias("_cdc_op"))
+        # Tombstones match by key in the merge's join (never SQL string
+        # splicing — a key containing quotes/backslashes must not be
+        # able to reshape a predicate).
+        r = self.merge_into(src, [key], clauses=[
+            {"when": "matched", "action": "delete",
+             "condition": "src._cdc_op = 'D'"},
+            {"when": "matched", "action": "update",
+             "set": {c: f"src.{c}" for c in mcols if c != key},
+             "condition": "src._cdc_op <> 'D'"},
+            {"when": "not_matched", "action": "insert",
+             "values": {c: f"src.{c}" for c in mcols},
+             "condition": "src._cdc_op <> 'D'"},
+        ], dv=dv)
         b.unpersist()
-        out["version"] = self.latest_version()
-        return out
+        return {
+            "upserted": r["updated"] + r["inserted"],
+            "deleted": r["deleted"],
+            "version": r["version"],
+        }
 
     def delete_keys(self, keys: DataFrame, key: str, dv: bool = False) -> dict:
         """DELETE rows whose ``key`` appears in ``keys`` — the injection
@@ -3957,59 +3966,20 @@ class LakeTable:
         apply the vector as an anti-join; compaction folds it in.
         Results are bit-identical to rewrite mode (oracled by
         ``dv_delete_parity_audit``)."""
-        v, active, schema = self._snapshot()
         ks = keys.select(key).distinct().persist()
-        cur = self._read_entries(active, schema, keep_meta=True)
-        matched = cur.join(ks, key, "left_semi").persist()
-        touched, deleted = self._touched_counts(
-            matched, col="_dv_base", active=active
-        )
-        if not touched:
-            for f in (ks, matched):
-                f.unpersist()
-            return {"deleted": 0, "rewritten_files": 0, "version": v}
-        by_path = {a["path"]: a for a in active}
-        t_entries = [by_path[p] for p in touched]
-        data_cols = [f.name for f in schema.fields]
-        # Rebase guard: a file appended AFTER our snapshot may contain a
-        # key we're purging — rebasing past it would leave those rows
-        # alive (a silently incomplete GDPR erasure).
-        probe = (
-            lambda ents: self._read_entries(ents, schema)
-            .join(ks, key, "left_semi")
-            .limit(1)
-            .count()
-            > 0
-        )
-        if dv:
-            adds, new_v = self._commit_dv(
-                v, t_entries, matched, schema, read_probe=probe,
-                metrics={"rows_deleted": deleted, "files_rewritten": 0},
+        try:
+            # every active file is a candidate: key values say nothing
+            # about file location. The rebase probe (a semi-join too)
+            # keeps a file appended after our snapshot that holds a
+            # purged key from surviving — a silently incomplete erasure.
+            return self._delete_rows(
+                lambda df: df.join(ks, key, "left_semi"),
+                lambda df: df.join(ks, key, "left_anti"),
+                lambda active, schema: active,
+                dv,
             )
-            rewritten = 0
-        else:
-            affected = self._read_entries(t_entries, schema)
-            keep = affected.join(ks, key, "left_anti")
-            # no emptiness pre-probe: a zero-row write lands no files
-            # (rows==0 splits are dropped), so writing directly costs
-            # the same one action the probe did — and saves it when
-            # rows survive (the common case)
-            adds = self._write_files(keep, schema)
-            new_v = self._commit_checked(
-                v, "delete", adds, touched, schema, t_entries, read_probe=probe,
-                metrics={"rows_deleted": deleted, "files_rewritten": len(touched)},
-            )
-            rewritten = len(touched)
-        self._write_cdf(
-            new_v,
-            matched.select(*data_cols).withColumn(
-                "_change_type", F.lit("delete")
-            ),
-            schema,
-        )
-        for f in (ks, matched):
-            f.unpersist()
-        return {"deleted": deleted, "rewritten_files": rewritten, "version": new_v}
+        finally:
+            ks.unpersist()
 
     def _commit_dv(
         self,
@@ -4216,7 +4186,7 @@ class LakeTable:
         matched key; unmatched source rows become inserts in new files.
         Returns {inserted, updated, rewritten_files}. Reference
         semantics: base_loaders.py:149-181; NULL-key source rows are
-        inserts (see sinks/merge.merge_upsert_df).
+        inserts (see :func:`merge_upsert_df`).
 
         ``dv=True``: deletion-vector merge (Delta low-shuffle-merge
         parity) — the matched OLD rows are vectored out of their files
@@ -4224,8 +4194,6 @@ class LakeTable:
         1-row update to a 1 GB file then writes 1 row + a ~KB sidecar
         instead of rewriting the gigabyte; the unmatched rows of
         touched files are never read or rewritten."""
-        from .sinks.merge import merge_upsert_df
-
         v, active, schema = self._snapshot()
         source = self._apply_generated(source, schema)
         source = self._apply_defaults(source, schema)
@@ -4423,7 +4391,10 @@ class LakeTable:
         commit — additive only, reusing append(merge_schema=True)'s
         rules, composed with column mapping (fresh physical names) and
         CDF images (preimages read NULL for columns newer than their
-        files)."""
+        files).
+
+        A merge that acts on no row and widens no column commits
+        nothing and returns the snapshot version."""
         for c in clauses:
             when = c.get("when")
             act = c.get("action")
@@ -4454,6 +4425,7 @@ class LakeTable:
             raise ValueError("merge_into requires at least one clause")
 
         v, active, schema = self._snapshot()
+        new_fields: list[StructField] = []
         if evolve_schema:
             # MERGE ... WITH SCHEMA EVOLUTION (Delta parity): new SOURCE
             # columns widen the target schema in the SAME commit —
@@ -4467,7 +4439,6 @@ class LakeTable:
             used = {_phys(f) for f in schema.fields} | set(
                 json.loads(self.props(v).get(_DROPPED_PROP, "[]"))
             )
-            new_fields = []
             for f in source.schema.fields:
                 have = cur_by_name.get(f.name)
                 if have is None:
@@ -4798,6 +4769,14 @@ class LakeTable:
             for f_ in (src, joined, tgt_acting):
                 f_.unpersist()
             raise
+        if not (n_inserted or n_updated or n_deleted or new_fields):
+            # nothing acted and the schema did not widen: no commit,
+            # like delete/update — an empty version would only make
+            # readers and CDF consumers replay a no-op
+            for f_ in (src, joined, tgt_acting):
+                f_.unpersist()
+            return {"inserted": 0, "updated": 0, "deleted": 0,
+                    "rewritten_files": 0, "version": v}
         # watermark observed during the insert write above
         id_props = fin_id(dict(id_props_base)) if fin_id is not None else None
 
@@ -5086,12 +5065,33 @@ class LakeTable:
         """DELETE WHERE predicate: rewrite only files containing a
         pred=TRUE row. NULL-predicate rows are KEPT (SQL semantics).
         ``dv=True``: deletion-vector mode — see ``delete_keys``."""
-        v, active, schema = self._snapshot()
         cond = F.expr(f"coalesce(({predicate}), false)")
-        # partition-only predicates prune the read set from metadata
-        cand = self._partition_candidates(active, predicate, schema)
-        cur = self._read_entries(cand, schema, keep_meta=True)
-        matched = cur.filter(cond).persist()
+        return self._delete_rows(
+            lambda df: df.filter(cond),
+            lambda df: df.filter(~cond),
+            # partition-only predicates prune the read set from metadata
+            lambda active, schema: self._partition_candidates(
+                active, predicate, schema
+            ),
+            dv,
+        )
+
+    def _delete_rows(self, match, keep, candidates, dv: bool) -> dict:
+        """The one DELETE pipeline behind :meth:`delete` and
+        :meth:`delete_keys`: snapshot → matched rows → touched files
+        and row count (one aggregate) → deletion vector or rewrite of
+        the touched files → checked commit → CDF delete rows.
+
+        ``match(df)`` / ``keep(df)`` map table rows to the rows to
+        delete / keep; ``candidates(active, schema)`` picks the entries
+        that may hold a matching row. ``match`` is also the rebase
+        probe: concurrently appended matching rows conflict instead of
+        silently surviving the delete."""
+        v, active, schema = self._snapshot()
+        cur = self._read_entries(
+            candidates(active, schema), schema, keep_meta=True
+        )
+        matched = match(cur).persist()
         touched, deleted = self._touched_counts(
             matched, col="_dv_base", active=active
         )
@@ -5101,11 +5101,8 @@ class LakeTable:
         by_path = {a["path"]: a for a in active}
         t_entries = [by_path[p] for p in touched]
         data_cols = [f.name for f in schema.fields]
-        # Rebase guard: concurrently-appended rows matching the
-        # predicate must conflict, not silently survive the delete.
         probe = (
-            lambda ents: self._read_entries(ents, schema)
-            .filter(cond)
+            lambda ents: match(self._read_entries(ents, schema))
             .limit(1)
             .count()
             > 0
@@ -5118,9 +5115,11 @@ class LakeTable:
             rewritten = 0
         else:
             affected = self._read_entries(t_entries, schema)
-            keep = affected.filter(~cond)
-            # zero-row writes land no files — no emptiness pre-probe
-            adds = self._write_files(keep, schema)
+            # no emptiness pre-probe: a zero-row write lands no files
+            # (rows==0 splits are dropped), so writing directly costs
+            # the same one action the probe did — and saves it when
+            # rows survive (the common case)
+            adds = self._write_files(keep(affected), schema)
             new_v = self._commit_checked(
                 v, "delete", adds, touched, schema, t_entries, read_probe=probe,
                 metrics={"rows_deleted": deleted, "files_rewritten": len(touched)},

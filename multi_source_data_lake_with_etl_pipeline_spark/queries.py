@@ -1440,7 +1440,7 @@ def sql_passthrough_shipping_priority(spark: SparkSession, sf_dir: str) -> DataF
     """,
 )
 def merge_upsert_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sinks.merge import merge_upsert_df
+    from .lake import merge_upsert_df
 
     o = _t(spark, sf_dir, "orders")
     updates = o.filter(F.col("o_orderkey") <= 50).withColumn(
@@ -11465,8 +11465,8 @@ def lake_cdf_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Partition-scoped maintenance + single-commit CDC (round 8):
 # OPTIMIZE ... WHERE compacts ONLY the fragmented partition (other
-# partitions' files byte-identical), apply_cdc(atomic=True) lands a
-# mixed upsert+tombstone batch as ONE merge_into commit (no visible
+# partitions' files byte-identical), apply_cdc lands a mixed
+# upsert+tombstone batch as ONE merge_into commit (no visible
 # intermediate version between upserts and deletes), and the
 # partition-pruned merge path restricts the target read to the
 # source's partitions. The oracle reconstructs the final state and
@@ -11545,7 +11545,7 @@ def lake_partition_maintenance_audit(spark: SparkSession, sf_dir: str) -> DataFr
         )
     )
     v_pre = t.latest_version()
-    r = t.apply_cdc(batch, "k", atomic=True, dv=True)
+    r = t.apply_cdc(batch, "k", dv=True)
     atomic_ok = int(r["version"] == v_pre + 1)
     out = (
         t.read()

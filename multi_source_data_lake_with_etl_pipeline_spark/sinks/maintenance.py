@@ -13,13 +13,16 @@ the no-Delta equivalents of OPTIMIZE / OPTIMIZE ZORDER / VACUUM:
   each output file owns a tight, near-disjoint value range and
   min/max data skipping works again for predicates on those columns.
 - ``vacuum_table``: remove crash leftovers of the copy-on-write
-  writers (``<table>.old`` aside copies, orphaned ``merge_*``/
-  ``del_*`` temp dirs). Run only when no writer is active.
+  rewrites (``<table>.old`` aside copies, orphaned ``compact_*``/
+  ``cluster_*`` temp dirs, and the ``merge_*``/``del_*`` ones older
+  directory-swap upsert/delete writers left). Run only when no writer
+  is active.
 
-All rewrites go through the same aside-swap as MERGE (never a moment
-with no table on disk). Reference parity: the reference has no
-maintenance layer at all (its loaders append forever) — this is part
-of what running the same pipelines at 100 TB actually requires.
+Both rewrites go through one aside-swap (never a moment with no table
+on disk); upserts and deletes run on ``lake.LakeTable`` instead.
+Reference parity: the reference has no maintenance layer at all (its
+loaders append forever) — this is part of what running the same
+pipelines at 100 TB actually requires.
 """
 
 from __future__ import annotations
@@ -32,7 +35,23 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .merge import _swap_table_dir
+
+
+def _swap_table_dir(table_path: str, tmp: str) -> None:
+    """Replace ``table_path`` with ``tmp`` without a no-table window:
+    rename live aside → rename new in → drop the aside copy. A crash
+    between the renames leaves ``<path>.old`` intact for manual
+    recovery (vs. the rmtree-first pattern, which loses the table)."""
+    old = table_path + ".old"
+    if os.path.exists(old):  # stale leftover from a previous crash
+        shutil.rmtree(old)
+    os.rename(table_path, old)
+    try:
+        os.rename(tmp, table_path)
+    except OSError:
+        os.rename(old, table_path)  # roll back: restore the live table
+        raise
+    shutil.rmtree(old)
 
 
 def _parquet_files(table_path: str) -> list[str]:

@@ -1,12 +1,14 @@
-"""Dump .explain('formatted') for named queries to plans/r11/.
+"""Dump .explain('formatted') for named queries to plans/<round>/.
 
 For audit-shaped queries (lake build + read-back) the returned frame's
 plan is the final aggregate over the lake read; the commit-machinery
 evidence lives in job counts (scripts/profile_r10.py) — both are
 committed so the round's plan claims are checkable offline.
 
-Usage: python scripts/dump_plans_r11.py <label> [sf_dir] [name ...]
-Writes plans/r11/<name>_<label>.txt for each query.
+Usage: python scripts/dump_plans.py <round> <label> [sf_dir] [name ...]
+Writes plans/<round>/<name>_<label>.txt for each query (default: the
+lake/analytics set below). ``sf_dir`` defaults to $SPARK_GRAFT_SF_DIR,
+the dataset bench.py reads.
 """
 
 from __future__ import annotations
@@ -49,15 +51,21 @@ DEFAULT_SET = [
 
 
 def main() -> int:
-    label = sys.argv[1]
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    names = sys.argv[3:] or DEFAULT_SET
+    if len(sys.argv) < 3:
+        print(__doc__, file=sys.stderr)
+        return 2
+    rnd, label = sys.argv[1], sys.argv[2]
+    sf_dir = sys.argv[3] if len(sys.argv) > 3 else os.environ.get("SPARK_GRAFT_SF_DIR")
+    if not sf_dir:
+        print("no sf_dir given and SPARK_GRAFT_SF_DIR unset", file=sys.stderr)
+        return 2
+    names = sys.argv[4:] or DEFAULT_SET
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r11",
+        "plans", rnd,
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("plans-r11")
+    spark = get_spark(f"plans-{rnd}")
     spark.sparkContext.setLogLevel("ERROR")
     all_q = q.spark_queries()
     for name in names:

@@ -15,13 +15,8 @@ from multi_source_data_lake_with_etl_pipeline_spark.plans.pipeline import (
     build_plan,
     run_job,
 )
+from multi_source_data_lake_with_etl_pipeline_spark.lake import LakeTable
 from multi_source_data_lake_with_etl_pipeline_spark.sinks.files import write_file
-from multi_source_data_lake_with_etl_pipeline_spark.sinks.merge import (
-    delete_where_partitioned,
-    merge_upsert_partitioned,
-    delete_where,
-    merge_upsert,
-)
 from multi_source_data_lake_with_etl_pipeline_spark.sinks.routing import (
     LoaderManager,
     MultiTargetLoader,
@@ -63,25 +58,28 @@ def test_sql_passthrough_over_catalog(spark, sf_dir):
 
 
 def test_merge_upsert_counts_and_content(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    spark.createDataFrame(
-        [(1, "old", 10.0), (2, "keep", 20.0)], "id long, name string, v double"
-    ).write.parquet(path)
+    t = LakeTable.create(
+        spark, str(tmp_path / "tbl"),
+        spark.createDataFrame(
+            [(1, "old", 10.0), (2, "keep", 20.0)], "id long, name string, v double"
+        ),
+    )
     src = spark.createDataFrame(
         [(1, "new", 11.0), (3, "ins", 30.0)], "id long, name string, v double"
     )
-    res = merge_upsert(spark, path, src, "id")
-    assert res == {"inserted": 1, "updated": 1}
-    rows = {r["id"]: r for r in spark.read.parquet(path).collect()}
+    res = t.merge(src, "id")
+    assert (res["inserted"], res["updated"]) == (1, 1)
+    rows = {r["id"]: r for r in t.read().collect()}
     assert rows[1]["name"] == "new" and rows[2]["name"] == "keep" and rows[3]["v"] == 30.0
 
 
 def test_delete_where(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    spark.createDataFrame([(i, float(i)) for i in range(10)], "id long, v double").write.parquet(path)
-    n = delete_where(spark, path, "v >= 7")
-    assert n == 3
-    assert spark.read.parquet(path).count() == 7
+    t = LakeTable.create(
+        spark, str(tmp_path / "tbl"),
+        spark.createDataFrame([(i, float(i)) for i in range(10)], "id long, v double"),
+    )
+    assert t.delete("v >= 7")["deleted"] == 3
+    assert t.read().count() == 7
 
 
 def test_content_routing_rules():
@@ -179,92 +177,97 @@ def test_deep_merge_config():
     assert base["reader"]["opts"] == {"a": 1, "b": 2}  # no mutation
 
 
-def _file_state(root):
-    """{relpath: (size, md5)} for every data file under a table dir."""
+def _part_files(t, keep):
+    """{path: (size, md5)} of the active data files whose partition
+    value ``p`` satisfies ``keep``."""
     import hashlib
 
     state = {}
-    for dirpath, _dirs, files in os.walk(root):
-        for f in files:
-            if f.startswith(("_", ".")):
-                continue
-            p = os.path.join(dirpath, f)
-            with open(p, "rb") as fh:
-                state[os.path.relpath(p, root)] = (
-                    os.path.getsize(p),
-                    hashlib.md5(fh.read()).hexdigest(),
-                )
+    for a in t._snapshot()[1]:
+        if keep(a["partition"]["p"]):
+            with open(t._abs(a["path"]), "rb") as fh:
+                state[a["path"]] = (a["bytes"], hashlib.md5(fh.read()).hexdigest())
     return state
 
 
 def test_delete_where_keeps_null_predicate_rows(spark, tmp_path):
     """SQL DELETE removes only pred=TRUE rows; NULL-predicate rows stay."""
-    path = str(tmp_path / "tbl")
-    spark.createDataFrame(
-        [(1, 5.0), (2, None), (3, 9.0)], "id long, v double"
-    ).write.parquet(path)
-    n = delete_where(spark, path, "v >= 7")
-    assert n == 1
-    left = {r["id"] for r in spark.read.parquet(path).collect()}
+    t = LakeTable.create(
+        spark, str(tmp_path / "tbl"),
+        spark.createDataFrame([(1, 5.0), (2, None), (3, 9.0)], "id long, v double"),
+    )
+    assert t.delete("v >= 7")["deleted"] == 1
+    left = {r["id"] for r in t.read().collect()}
     assert left == {1, 2}  # id=2 (NULL v) must survive
 
 
 def test_merge_upsert_null_key_source_row_is_insert(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    spark.createDataFrame([(1, "a")], "id long, name string").write.parquet(path)
+    t = LakeTable.create(
+        spark, str(tmp_path / "tbl"),
+        spark.createDataFrame([(1, "a")], "id long, name string"),
+    )
     src = spark.createDataFrame([(None, "nullkey"), (1, "upd")], "id long, name string")
-    res = merge_upsert(spark, path, src, "id")
-    assert res == {"inserted": 1, "updated": 1}
-    rows = sorted(spark.read.parquet(path).collect(), key=lambda r: (r["id"] is None, r["id"]))
+    res = t.merge(src, "id")
+    assert (res["inserted"], res["updated"]) == (1, 1)
+    rows = sorted(t.read().collect(), key=lambda r: (r["id"] is None, r["id"]))
     assert [(r["id"], r["name"]) for r in rows] == [(1, "upd"), (None, "nullkey")]
 
 
 def test_partitioned_upsert_leaves_other_partitions_untouched(spark, tmp_path):
     """VERDICT r1 #2: a one-partition upsert must leave every other
-    partition's data files byte-identical (partition-pruned COW)."""
-    path = str(tmp_path / "ptbl")
-    spark.createDataFrame(
-        [(i, i % 4, f"n{i}") for i in range(40)], "id long, p int, name string"
-    ).write.partitionBy("p").parquet(path)
-    before = _file_state(path)
+    partition's data files byte-identical. A partition-scoped upsert is
+    merge_into with the partition column in ON, which reads only the
+    source's partitions."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "ptbl"),
+        spark.createDataFrame(
+            [(i, i % 4, f"n{i}") for i in range(40)], "id long, p int, name string"
+        ),
+        partition_by=["p"],
+    )
+    before = _part_files(t, lambda p: p != 1)
     src = spark.createDataFrame([(1, 1, "upd"), (101, 1, "new")], "id long, p int, name string")
-    res = merge_upsert_partitioned(spark, path, src, "id", "p")
-    assert res == {"inserted": 1, "updated": 1}
-    after = _file_state(path)
-    untouched_before = {k: v for k, v in before.items() if "p=1" not in k.split(os.sep)}
-    untouched_after = {k: v for k, v in after.items() if "p=1" not in k.split(os.sep)}
-    assert untouched_before == untouched_after, "non-target partitions were rewritten"
-    rows = {r["id"]: r for r in spark.read.parquet(path).collect()}
+    res = t.merge_into(src, ["id", "p"], clauses=[
+        {"when": "matched", "action": "update", "set": "all"},
+        {"when": "not_matched", "action": "insert", "values": "all"},
+    ])
+    assert (res["inserted"], res["updated"]) == (1, 1)
+    assert _part_files(t, lambda p: p != 1) == before, "non-target partitions were rewritten"
+    assert t.history()[0]["metrics"]["files_partition_pruned"] == len(before)
+    rows = {r["id"]: r for r in t.read().collect()}
     assert len(rows) == 41 and rows[1]["name"] == "upd" and rows[101]["name"] == "new"
 
 
 def test_partitioned_upsert_cross_partition_move_drains_old(spark, tmp_path):
-    path = str(tmp_path / "ptbl")
-    spark.createDataFrame(
-        [(1, 0, "only"), (2, 1, "other")], "id long, p int, name string"
-    ).write.partitionBy("p").parquet(path)
-    src = spark.createDataFrame([(1, 1, "moved")], "id long, p int, name string")
-    merge_upsert_partitioned(spark, path, src, "id", "p")
-    rows = {(r["id"], r["p"]) for r in spark.read.parquet(path).collect()}
+    """An upsert by key that changes the partition value moves the row;
+    its old partition, now empty, holds no active file."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "ptbl"),
+        spark.createDataFrame([(1, 0, "only"), (2, 1, "other")], "id long, p int, name string"),
+        partition_by=["p"],
+    )
+    t.merge(spark.createDataFrame([(1, 1, "moved")], "id long, p int, name string"), "id")
+    rows = {(r["id"], r["p"]) for r in t.read().collect()}
     assert rows == {(1, 1), (2, 1)}
-    assert not os.path.exists(os.path.join(path, "p=0"))  # drained dir dropped
+    assert not _part_files(t, lambda p: p == 0)  # drained partition dropped
 
 
 def test_partitioned_delete_prunes_and_drops_emptied(spark, tmp_path):
-    path = str(tmp_path / "ptbl")
-    spark.createDataFrame(
-        [(1, 0, 1.0), (2, 0, None), (3, 1, 9.0), (4, 2, 3.0)],
-        "id long, p int, v double",
-    ).write.partitionBy("p").parquet(path)
-    before = _file_state(path)
-    n = delete_where_partitioned(spark, path, "v >= 9", "p")
-    assert n == 1
-    after = _file_state(path)
+    t = LakeTable.create(
+        spark, str(tmp_path / "ptbl"),
+        spark.createDataFrame(
+            [(1, 0, 1.0), (2, 0, None), (3, 1, 9.0), (4, 2, 3.0)],
+            "id long, p int, v double",
+        ),
+        partition_by=["p"],
+    )
+    before = _part_files(t, lambda p: p != 1)
+    res = t.delete("v >= 9")
+    assert (res["deleted"], res["rewritten_files"]) == (1, 1)
     # p=0 and p=2 untouched byte-for-byte; p=1 fully drained and dropped
-    same = lambda st: {k: v for k, v in st.items() if "p=1" not in k.split(os.sep)}
-    assert same(before) == same(after)
-    assert not os.path.exists(os.path.join(path, "p=1"))
-    left = {r["id"] for r in spark.read.parquet(path).collect()}
+    assert _part_files(t, lambda p: p != 1) == before
+    assert not _part_files(t, lambda p: p == 1)
+    left = {r["id"] for r in t.read().collect()}
     assert left == {1, 2, 4}  # NULL-v row kept
 
 

@@ -175,36 +175,57 @@ def test_nbs_update_all_rejected(spark, tmp_path):
 
 
 class TestAtomicCdc:
-    def test_atomic_matches_two_commit_path_in_one_version(self, spark, tmp_path):
-        """apply_cdc(atomic=True) = ONE merge_into commit for the
-        whole batch — bit-identical table vs the two-commit path, but
-        no intermediate version where upserts are visible without the
+    def test_cdc_batch_lands_in_one_version(self, spark, tmp_path):
+        """apply_cdc = ONE merge_into commit for the whole batch — no
+        intermediate version where upserts are visible without the
         tombstones."""
-        base = spark.createDataFrame(
-            [(1, 10), (2, 20), (3, 30), (4, 40)], "k long, v long"
+        t = LakeTable.create(
+            spark, str(tmp_path / "a"),
+            spark.createDataFrame(
+                [(1, 10), (2, 20), (3, 30), (4, 40)], "k long, v long"
+            ),
         )
-        ta = LakeTable.create(spark, str(tmp_path / "a"), base)
-        tb = LakeTable.create(spark, str(tmp_path / "b"), base)
         batch = spark.createDataFrame(
             [(2, 22, "U"), (3, 0, "D"), (9, 90, "I"), (99, 0, "D")],
             "k long, v long, op string",
         )
-        va = ta.latest_version()
-        ra = ta.apply_cdc(batch, "k", atomic=True, dv=True)
-        rb = tb.apply_cdc(batch, "k", dv=True)
-        assert ra["version"] == va + 1           # single commit
-        assert tb.latest_version() == 2          # merge + delete
-        assert ra["upserted"] == rb["upserted"] == 2
-        assert ra["deleted"] == rb["deleted"] == 1  # k=99 absent: no-op
-        assert sorted(map(tuple, ta.read().collect())) == sorted(
-            map(tuple, tb.read().collect())
-        ) == [(1, 10), (2, 22), (4, 40), (9, 90)]
+        v0 = t.latest_version()
+        r = t.apply_cdc(batch, "k", dv=True)
+        assert r["version"] == t.latest_version() == v0 + 1  # single commit
+        assert r["upserted"] == 2
+        assert r["deleted"] == 1  # k=99 absent: no-op
+        assert sorted(map(tuple, t.read().collect())) == [
+            (1, 10), (2, 22), (4, 40), (9, 90)
+        ]
         # replay safety with order_col: the latest change per key wins
         seq = spark.createDataFrame(
             [(2, 1, "D", 1), (2, 222, "U", 2)], "k long, v long, op string, seq long"
         )
-        ta.apply_cdc(seq, "k", order_col="seq", atomic=True)
-        assert {r["k"]: r["v"] for r in ta.read().collect()}[2] == 222
+        t.apply_cdc(seq, "k", order_col="seq")
+        assert {r["k"]: r["v"] for r in t.read().collect()}[2] == 222
+
+    def test_noop_merge_into_and_apply_cdc_commit_nothing(self, spark, tmp_path):
+        """A merge that acts on no row lands no version — like delete,
+        delete_keys and update. Covers a matched-delete of an absent
+        key and a CDC batch of absent-key tombstones, both modes."""
+        t = LakeTable.create(
+            spark, str(tmp_path / "t"),
+            spark.createDataFrame([(1, 10), (2, 20)], "k long, v long"),
+        )
+        v0 = t.latest_version()
+        r = t.merge_into(
+            spark.createDataFrame([(99,)], "k long"), ["k"],
+            clauses=[{"when": "matched", "action": "delete"}],
+        )
+        assert (r["deleted"], r["version"]) == (0, v0)
+        absent = spark.createDataFrame(
+            [(98, None, "D"), (99, None, "D")], "k long, v long, op string"
+        )
+        for dv in (False, True):
+            r = t.apply_cdc(absent, "k", dv=dv)
+            assert (r["upserted"], r["deleted"], r["version"]) == (0, 0, v0)
+        assert t.latest_version() == v0
+        assert sorted(map(tuple, t.read().collect())) == [(1, 10), (2, 20)]
 
 
 class TestStringFooterStats:

@@ -74,43 +74,37 @@ class TestAtomicCdcGeneratedColumns:
 
     def test_atomic_accepts_generated_column_in_batch(self, spark, tmp_path):
         """A CDC batch carrying the generated column (correct values)
-        applies identically in atomic and non-atomic mode — the 'same
-        result, one version' contract."""
-        ta = self._mk(spark, tmp_path / "a")
-        tb = self._mk(spark, tmp_path / "b")
+        applies in ONE commit with the expected rows."""
+        t = self._mk(spark, tmp_path / "a")
         batch = spark.createDataFrame(
             [(1, 100, 200, "U"), (3, 30, 60, "I"), (2, None, None, "D")],
             "k long, v long, v2 long, op string",
         )
-        ra = ta.apply_cdc(batch, key="k", atomic=True)
-        rb = tb.apply_cdc(batch, key="k", atomic=False)
-        assert ra["upserted"] == rb["upserted"] == 2
-        assert ra["deleted"] == rb["deleted"] == 1
-        rows_a = sorted(map(tuple, ta.read().collect()))
-        rows_b = sorted(map(tuple, tb.read().collect()))
-        assert rows_a == rows_b == [(1, 100, 200), (3, 30, 60)]
-        # atomic really was ONE commit (create is version 0)
-        assert ra["version"] == 1
+        r = t.apply_cdc(batch, key="k")
+        assert (r["upserted"], r["deleted"]) == (2, 1)
+        assert sorted(map(tuple, t.read().collect())) == [(1, 100, 200), (3, 30, 60)]
+        # ONE commit (create is version 0)
+        assert r["version"] == t.latest_version() == 1
 
     def test_atomic_omitted_generated_column_recomputes(self, spark, tmp_path):
         t = self._mk(spark, tmp_path / "t")
         batch = spark.createDataFrame(
             [(1, 100, "U"), (3, 30, "I")], "k long, v long, op string"
         )
-        t.apply_cdc(batch, key="k", atomic=True)
+        t.apply_cdc(batch, key="k")
         got = {r["k"]: r["v2"] for r in t.read().collect()}
         assert got == {1: 200, 2: 40, 3: 60}
 
     def test_atomic_divergent_generated_value_rejected(self, spark, tmp_path):
         """A supplied generated value that disagrees with the expression
-        rejects the whole batch BEFORE any commit (non-atomic parity)."""
+        rejects the whole batch BEFORE any commit (append parity)."""
         t = self._mk(spark, tmp_path / "t")
         v0 = t.latest_version()
         batch = spark.createDataFrame(
             [(1, 100, 999, "U")], "k long, v long, v2 long, op string"
         )
         with pytest.raises(ConstraintViolation, match="GENERATED ALWAYS AS"):
-            t.apply_cdc(batch, key="k", atomic=True)
+            t.apply_cdc(batch, key="k")
         assert t.latest_version() == v0
 
 
@@ -647,12 +641,20 @@ class TestIdentityColumns:
         batch = spark.createDataFrame(
             [("a", "U"), ("n", "I"), ("b", "D")], "name string, op string"
         )
-        res = t.apply_cdc(batch, key="name", atomic=True)
+        res = t.apply_cdc(batch, key="name")
         assert res["upserted"] == 2 and res["deleted"] == 1
         after = {r["name"]: r["id"] for r in t.read().collect()}
         assert set(after) == {"a", "c", "n"}
         assert after["a"] == before["a"] and after["c"] == before["c"]
         assert after["n"] > max(before.values())
+        # a feed SUPPLYING the engine-assigned column rejects whole
+        v1 = t.latest_version()
+        with pytest.raises(ValueError, match="IDENTITY"):
+            t.apply_cdc(
+                spark.createDataFrame([(7, "z", "I")], "id long, name string, op string"),
+                key="name",
+            )
+        assert t.latest_version() == v1
 
     def test_clone_carries_spec_and_watermark(self, spark, tmp_path):
         t = self._mk(spark, tmp_path / "t")
@@ -729,27 +731,22 @@ class TestColumnDefaults:
         got = {r["k"]: (r["v"], r["tag"]) for r in t.read().collect()}
         assert got == {1: (11, "a"), 2: (20, "dflt")}
 
-    def test_apply_cdc_atomic_matches_two_commit_with_default(
-        self, spark, tmp_path
-    ):
-        def mk(p):
-            return LakeTable.create(
-                spark, str(p),
-                spark.createDataFrame(
-                    [(1, 10, "x"), (2, 20, "y")], "k long, v long, tag string"
-                ),
-                column_defaults={"tag": "'cdc'"},
-            )
-
-        ta, tb = mk(tmp_path / "a"), mk(tmp_path / "b")
+    def test_apply_cdc_fills_default_in_one_version(self, spark, tmp_path):
+        """A feed omitting a DEFAULTed column lands the default on both
+        the update and the insert, in one commit."""
+        t = LakeTable.create(
+            spark, str(tmp_path / "a"),
+            spark.createDataFrame(
+                [(1, 10, "x"), (2, 20, "y")], "k long, v long, tag string"
+            ),
+            column_defaults={"tag": "'cdc'"},
+        )
+        v0 = t.latest_version()
         batch = spark.createDataFrame(
             [(1, 100, "U"), (3, 30, "I")], "k long, v long, op string"
         )
-        ta.apply_cdc(batch, key="k", atomic=True)
-        tb.apply_cdc(batch, key="k", atomic=False)
-        rows_a = sorted(map(tuple, ta.read().collect()))
-        rows_b = sorted(map(tuple, tb.read().collect()))
-        assert rows_a == rows_b == [
+        assert t.apply_cdc(batch, key="k")["version"] == v0 + 1
+        assert sorted(map(tuple, t.read().collect())) == [
             (1, 100, "cdc"), (2, 20, "y"), (3, 30, "cdc")
         ]
 
